@@ -1270,6 +1270,29 @@ def test_substrate_memo_keyed_by_application_id_with_eviction():
         simq._SUBSTRATE_MEMO.update(saved)
 
 
+def test_substrate_memo_rebuilds_when_input_files_change(spark, tmp_path):
+    """The memo serves a substrate only while the files under sf_dir
+    are unchanged: rewriting a parquet table mid-session makes the next
+    call rebuild from the new rows instead of serving the stale one."""
+    from variantcalling_spark._memo import memoized
+
+    sf = str(tmp_path / "sf")
+    path = f"{sf}/documents.parquet"
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.read.parquet(path).count()
+
+    spark.range(5).write.parquet(path)
+    assert memoized("fp_test", spark, sf, build) == 5
+    assert memoized("fp_test", spark, sf, build) == 5
+    assert len(builds) == 1
+    spark.range(7).write.mode("overwrite").parquet(path)
+    assert memoized("fp_test", spark, sf, build) == 7
+    assert len(builds) == 2
+
+
 def test_plan_bits_and_bands_joint_narrowing():
     """r10 ADVICE guard: the joint planner keeps the adaptive band
     width when the recall-driven band count fits max_bands, narrows

@@ -64,6 +64,25 @@ def test_coverage_full_analysis_to_catalog(spark, depth, tmp_path):
     for r in rolled:
         assert abs(from500[(r.chrom, r.w5)] - r.m) < 1e-9
 
+    # fractional depths: count and DECIMAL mean from the one histogram
+    # equal a plain-pandas per-row computation bit for bit
+    from decimal import Decimal
+
+    frac = depth.withColumn("depth", (F.col("pos") % 41) * 0.25 + 0.5)
+    got = {
+        r.category: r
+        for r in coverage_summary(
+            frac, intervals, keys=["chrom"], depth_col="depth", pos_col="pos"
+        ).collect()
+    }
+    pdf = frac.toPandas().merge(intervals.toPandas(), on="chrom")
+    pdf = pdf[(pdf.pos >= pdf.start) & (pdf.pos < pdf.end)]
+    assert set(got) == set(pdf.category)
+    for cat, g in pdf.groupby("category"):
+        exact = sum(Decimal(f"{d:.2f}") for d in g.depth)
+        assert got[cat].n_positions == len(g)
+        assert got[cat].mean_depth == float(exact) / len(g)
+
 
 def test_evaluate_concordance_to_catalog(spark, tmp_path):
     rows = []

@@ -854,3 +854,105 @@ def test_lineage_cut_upgrades_to_reliable_checkpoint(spark, tmp_path):
         # lineage_cut call in the shared session)
         sc.setCheckpointDir(None)
         assert sc.getCheckpointDir() is None
+
+
+def _join_nodes(plan: str) -> list[str]:
+    """Plan lines whose operator is a join (codegen ``*(n)`` marker
+    skipped)."""
+    out = []
+    for ln in plan.splitlines():
+        words = ln.strip(" :+-|").split()
+        if words and words[0].startswith("*("):
+            words = words[1:]
+        if words and (words[0].endswith("Join") or words[0] == "CartesianProduct"):
+            out.append(ln)
+    return out
+
+
+def test_dedup_verify_owns_no_cache(spark):
+    """LSH candidates + Jaccard verify run as one plan: the operators
+    persist nothing (both self-join sides share one exchange instead),
+    so the collected plan reads no cache and the session's cache
+    manager stays empty."""
+    from variantcalling_spark.operators.dedup import (
+        jaccard_for_pairs,
+        portable_band_candidates,
+        portable_minhash_signatures,
+        shingles,
+    )
+    from variantcalling_spark.sources import load_table
+
+    spark.catalog.clearCache()
+    sh = shingles(load_table(spark, SF, "documents").select("doc_id", "text"))
+    cand = portable_band_candidates(portable_minhash_signatures(sh, 32), 8, 4)
+    out = jaccard_for_pairs(cand, sh)
+    out.collect()
+    p = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in p
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_coverage_summary_one_histogram_no_join(spark):
+    """count, mean and percentiles come out of ONE (category, depth)
+    histogram aggregate: nothing above it joins a second aggregate
+    branch back in."""
+    from pyspark.sql import functions as F2
+
+    from variantcalling_spark.pipelines.coverage import coverage_summary
+
+    depth = spark.range(0, 3000).select(
+        F2.lit("chr1").alias("chrom"),
+        F2.col("id").alias("pos"),
+        (F2.col("id") % 29).cast("int").alias("depth"),
+    )
+    iv = spark.createDataFrame(
+        [("chr1", 0, 1000, "exome"), ("chr1", 500, 2500, "LCR")],
+        "chrom string, start long, end long, category string",
+    )
+    p = (
+        coverage_summary(depth, iv, keys=["chrom"])
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    lines = p.splitlines()
+    top = next(i for i, ln in enumerate(lines) if "Aggregate" in ln)
+    assert not _join_nodes("\n".join(lines[:top])), p
+
+
+def test_depth_runs_scan_reads_once(spark, tmp_path):
+    """Both breakpoints of every read come out of ONE projection (an
+    inline of (start,+1),(end,-1)): no Union of two selects, and the
+    executed plan scans the reads once."""
+    from variantcalling_spark.operators.pileup import reads_to_depth_runs
+
+    path = str(tmp_path / "reads.parquet")
+    spark.createDataFrame(
+        [("chr1", s, s + 50) for s in range(0, 2000, 7)],
+        "chrom string, start long, end long",
+    ).write.parquet(path)
+    runs = reads_to_depth_runs(spark.read.parquet(path), bucket=64)
+    runs.collect()
+    p = runs._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in p
+    assert p.split("== Initial Plan ==")[0].count("FileScan") == 1, p
+
+
+def test_pr_curve_has_no_total_join(spark):
+    """The group's total tp is a whole-frame sum in the bucket prefix
+    window: the only join left is the broadcast prefix join, grouped or
+    not — no tot join, no cross join."""
+    from variantcalling_spark.operators.metrics import pr_curve
+
+    df = spark.createDataFrame(
+        [
+            ("snp" if i % 2 else "indel", ("tp", "fp", "fn")[i % 3], float(i % 53))
+            for i in range(300)
+        ],
+        "category string, classify string, score double",
+    )
+    for groups in (["category"], None):
+        p = (
+            pr_curve(df, "score", "classify", groups, bucket_width=8.0)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "CartesianProduct" not in p and "NestedLoop" not in p, p
+        assert len(_join_nodes(p)) == 1, p

@@ -11,8 +11,16 @@ from variantcalling_spark.sources.tables import TABLES
 
 
 @pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
+def duck(sf_dir, tmp_path_factory):
+    # spills go to pytest's tmp dir, not the working directory's .tmp/,
+    # and stop short of filling the disk. The memory limit stays DuckDB's
+    # default share of RAM: q422's oracle fails under a 6 GB cap
+    con = duckdb.connect(
+        config={
+            "temp_directory": str(tmp_path_factory.mktemp("duckdb")),
+            "max_temp_directory_size": "8GB",
+        }
+    )
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     return con

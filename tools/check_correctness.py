@@ -15,6 +15,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -30,7 +31,14 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    # spills go to the system temp dir, not the working directory's
+    # .tmp/ (DuckDB creates the directory and removes it on close), and
+    # stop short of filling the disk. The memory limit stays DuckDB's
+    # default share of RAM: q422's oracle needs more than 6 GB at sf0.01
+    spill = os.path.join(tempfile.gettempdir(), f"duckdb-spill-{os.getpid()}")
+    con = duckdb.connect(
+        config={"temp_directory": spill, "max_temp_directory_size": "8GB"}
+    )
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

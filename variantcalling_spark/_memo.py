@@ -14,17 +14,30 @@ checkpoints landed without one in r11). The rule:
     Checkpointed substrates that can be rebuilt per invocation —
     bench best-of-2, co-resident consumer queries — get BOTH.
 
-Keyed by (kind, applicationId, sf_dir): applicationId is stable and
-unique per session, unlike id(spark) which CPython can reuse after
-GC. Entries from stopped sessions are evicted on every access so a
-dead session's DataFrames and checkpoint RDD blocks are not pinned
-for the process lifetime. Values are (session, substrate) pairs so
-liveness can be checked without resurrecting the key.
+Keyed by (kind, applicationId, sf_dir) and served only while sf_dir's
+input fingerprint (sorted relative path, size and mtime_ns of every
+file under it) matches the one taken at build time, so a rewritten
+input rebuilds instead of serving a stale substrate. applicationId is
+stable and unique per session, unlike id(spark) which CPython can reuse
+after GC. Entries from stopped sessions are evicted on every access so
+a dead session's DataFrames and checkpoint RDD blocks are not pinned
+for the process lifetime. Values are (session, substrate, fingerprint)
+triples so liveness can be checked without resurrecting the key.
 """
 
 from __future__ import annotations
 
+import os
+
 _SUBSTRATE_MEMO: dict = {}
+
+
+def _input_fingerprint(sf_dir: str) -> tuple:
+    """Sorted (relative path, size, mtime_ns) of the files under
+    ``sf_dir``; empty for a path that is not a local directory."""
+    paths = [os.path.join(root, n) for root, _, names in os.walk(sf_dir) for n in names]
+    stats = [(os.path.relpath(p, sf_dir), os.stat(p)) for p in paths]
+    return tuple(sorted((rel, st.st_size, st.st_mtime_ns) for rel, st in stats))
 
 
 def _session_stopped(sess) -> bool:
@@ -35,17 +48,19 @@ def _session_stopped(sess) -> bool:
 
 
 def memoized(kind: str, spark, sf_dir: str, build):
-    """Return ``build()`` once per (kind, session, sf_dir); later calls
-    in the same session get the SAME object (and therefore the same
-    already-materialized checkpoint RDDs)."""
+    """Return ``build()`` once per (kind, session, sf_dir, input
+    fingerprint); later calls in the same session over unchanged files
+    get the SAME object (and therefore the same already-materialized
+    checkpoint RDDs)."""
     for k in [
-        k for k, (sess, _) in list(_SUBSTRATE_MEMO.items()) if _session_stopped(sess)
+        k for k, (sess, *_) in list(_SUBSTRATE_MEMO.items()) if _session_stopped(sess)
     ]:
         # pop, not del: builds may run from a thread pool (q478's arm
         # overlap), and two concurrent evictions of the same stale key
         # must not raise
         _SUBSTRATE_MEMO.pop(k, None)
     key = (kind, spark.sparkContext.applicationId, sf_dir)
-    if key not in _SUBSTRATE_MEMO:
-        _SUBSTRATE_MEMO[key] = (spark, build())
+    fp = _input_fingerprint(sf_dir)
+    if key not in _SUBSTRATE_MEMO or _SUBSTRATE_MEMO[key][2] != fp:
+        _SUBSTRATE_MEMO[key] = (spark, build(), fp)
     return _SUBSTRATE_MEMO[key][1]

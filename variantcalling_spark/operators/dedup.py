@@ -123,10 +123,10 @@ def jaccard_for_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     memory even at corpus scale — the verification path that keeps
     MinHash-LSH / prefix-filter dedup linear end-to-end at 100 TB.
     """
-    # persisted: both join sides (sa, sb) consume this aggregate, and the
-    # doc_a/doc_b renames defeat exchange reuse — without the persist the
-    # collect_set shuffle over the full shingle table runs twice
-    sets = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("sh_set")).transform(managed_persist)
+    # both join sides read this one aggregate; over an uncached ``sh``
+    # AQE's exchange reuse runs its collect_set shuffle once (a caller
+    # that caches ``sh`` gets one collect_set per side instead)
+    sets = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("sh_set"))
     sa = sets.select(
         F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("set_a")
     )
@@ -194,9 +194,11 @@ def prefix_filtered_pairs(sh: DataFrame, threshold: float) -> DataFrame:
     dedup path that survives a 100x corpus scale-up.
     """
     ranked = _df_ranked_shingles(sh)
-    # the prefix table feeds BOTH sides of the self-join below; the two
-    # subtrees get distinct expression ids, so exchange reuse cannot
-    # collapse them — persist once instead of ranking the corpus twice
+    # the prefix table feeds BOTH sides of the self-join below. Exchange
+    # reuse would rank the corpus once, but it does not fire when the
+    # caller has cached ``sh`` (each cached reference becomes its own
+    # table-cache query stage); without this persist q65 measured 14 -> 19
+    # stages and 1.84 -> 2.78 MB shuffle at sf0.01, q494 36 -> 51 stages
     prefix = (
         ranked.where(
             F.col("rk")
@@ -556,16 +558,15 @@ def portable_band_candidates(
 ) -> DataFrame:
     """Unique candidate pairs (doc_a < doc_b) colliding in >= 1 band.
 
-    The q74 recipe applied to MinHash: signatures are persisted (both
-    self-join sides consume the 32-MIN aggregate, and the doc_a/doc_b
-    renames defeat exchange reuse), all band buckets ride the explode as
-    one array, and a pair is emitted only from its FIRST colliding band
-    (a codegen filter over the carried bucket arrays) — so no
+    The q74 recipe applied to MinHash: both self-join sides read one
+    band projection of the signatures (AQE reuses its exchange unless
+    the signatures' input is cached), all band buckets ride the explode
+    as one array, and a pair is emitted only from its FIRST colliding
+    band (a codegen filter over the carried bucket arrays) — so no
     ``distinct()`` re-shuffle after the join and no redundant pairs
     enter the verify stage. Output-identical to
     ``portable_band_buckets`` + self-join + distinct."""
-    sig = signatures.transform(managed_persist)
-    ba = sig.select(
+    ba = signatures.select(
         "doc_id",
         F.array(
             *[_portable_bucket_expr(b, rows_per_band) for b in range(num_bands)]
@@ -772,9 +773,9 @@ def duplicated_substring_spans(
        (window partitioned by doc — never wider than one document).
 
     The shingle relation feeds both the frequency agg and the join
-    probe, so it is persisted for the duration of the plan (same
-    reasoning as the PPJoin shingle table, measured there at 2.5x).
-    Returns (id, span_start, span_end, span_tokens), token-indexed.
+    probe; it is not persisted (a persist measured two extra stages and
+    no shuffle saved on q114/q159). Returns (id, span_start, span_end,
+    span_tokens), token-indexed.
     """
     w = docs.select(id_col, F.split(F.col(text_col), " ").alias("w")).where(
         F.size("w") >= k
@@ -787,7 +788,7 @@ def duplicated_substring_spans(
                 f" i -> array_join(slice(w, i + 1, {k}), ' '))"
             )
         ).alias("pos", "shingle"),
-    ).transform(managed_persist)
+    )
     if min_docs == 2:
         # "appears in >= 2 distinct docs" == min(doc) != max(doc):
         # plain MIN/MAX partial-aggregate map-side, where count-distinct
@@ -1376,6 +1377,9 @@ def weighted_jaccard_for_pairs(pairs: DataFrame, tf: DataFrame) -> DataFrame:
     Scale shape: ``jaccard_for_pairs``'s — one equi-join of candidates
     against the tf relation per side, O(|docs| + Sigma_pairs |doc|),
     never corpus^2; every quantity is BIGINT until one final division."""
+    # both tot joins read this aggregate; exchange reuse does not fire
+    # over a cached ``tf`` (q494 caches it), and without the persist q494
+    # measured the tots aggregate twice: +7.7 KB shuffle, +1.2 MB input
     tots = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("tot")).transform(
         managed_persist
     )

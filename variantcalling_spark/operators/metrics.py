@@ -58,7 +58,9 @@ def pr_curve(
     single-partition sort for continuous scores at 100x. Instead:
     per-(group, score-bucket) partial sums -> an exclusive descending
     prefix over the TINY bucket relation -> bucket-LOCAL cumulative
-    windows, so no task ever sorts a whole group's curve. Exactness is
+    windows, so no task ever sorts a whole group's curve. The group's
+    total tp is a whole-frame sum in the same window as the prefix, so
+    the curve needs no second aggregate or join. Exactness is
     unchanged for any ``bucket_width`` (callers pick it to match the
     score range; scores must be non-null).
     """
@@ -82,20 +84,16 @@ def pr_curve(
         "__bk",
         F.coalesce(F.sum("__bt").over(w_pre), F.lit(0)).alias("__pre_tp"),
         F.coalesce(F.sum("__bf").over(w_pre), F.lit(0)).alias("__pre_fp"),
+        F.sum("__bt")
+        .over(w_pre.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+        .alias("tot_tp"),
     )
-    tot = bsum.groupBy(*group_cols).agg(F.sum("__bt").alias("tot_tp"))
     w_loc = (
         W.partitionBy(*group_cols, "__bk")
         .orderBy(F.desc(score_col))
         .rowsBetween(W.unboundedPreceding, 0)
     )
-    cum = per_score.join(F.broadcast(pre), [*group_cols, "__bk"])
-    cum = (
-        cum.join(F.broadcast(tot), group_cols)
-        if group_cols
-        else cum.crossJoin(F.broadcast(tot))
-    )
-    cum = cum.withColumn(
+    cum = per_score.join(F.broadcast(pre), [*group_cols, "__bk"]).withColumn(
         "cum_tp", F.col("__pre_tp") + F.sum("n_tp").over(w_loc)
     ).withColumn("cum_fp", F.col("__pre_fp") + F.sum("n_fp").over(w_loc))
     # a leading threshold bucket can hold only fn rows -> cum_tp+cum_fp=0;

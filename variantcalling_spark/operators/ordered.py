@@ -109,6 +109,16 @@ def histogram_percentiles(
     ceil(q * n). Deterministic (no interpolation), dialect-portable, and
     one shuffle on (group, value) — scales to per-base depth tables.
     """
+    return histogram_cdf(df, value_col, group_cols).groupBy(*group_cols).agg(
+        *cdf_percentiles(value_col, quantiles)
+    )
+
+
+def histogram_cdf(df: DataFrame, value_col: str, group_cols: list[str]) -> DataFrame:
+    """The (group, value) histogram behind ``histogram_percentiles``:
+    one row per distinct value with its count ``__cnt``, running count
+    ``__cum`` and group total ``__tot``. Aggregate it per group with
+    ``cdf_percentiles`` and any other histogram statistic."""
     hist = df.groupBy(*group_cols, value_col).agg(F.count(F.lit(1)).alias("__cnt"))
     w_cum = (
         W.partitionBy(*group_cols)
@@ -116,21 +126,20 @@ def histogram_percentiles(
         .rowsBetween(W.unboundedPreceding, 0)
     )
     w_tot = W.partitionBy(*group_cols)
-    cdf = hist.withColumn("__cum", F.sum("__cnt").over(w_cum)).withColumn(
+    return hist.withColumn("__cum", F.sum("__cnt").over(w_cum)).withColumn(
         "__tot", F.sum("__cnt").over(w_tot)
     )
-    aggs = []
-    for q in quantiles:
-        name = f"p{int(round(q * 100)):02d}"
-        aggs.append(
-            F.min(
-                F.when(
-                    F.col("__cum") >= F.ceil(F.lit(q) * F.col("__tot")),
-                    F.col(value_col),
-                )
-            ).alias(name)
-        )
-    return cdf.groupBy(*group_cols).agg(*aggs)
+
+
+def cdf_percentiles(value_col: str, quantiles: list[float]) -> list:
+    """Per quantile q, the ``p{q}`` aggregate over a ``histogram_cdf``
+    frame: the smallest value whose CDF reaches ceil(q * n)."""
+    return [
+        F.min(
+            F.when(F.col("__cum") >= F.ceil(F.lit(q) * F.col("__tot")), F.col(value_col))
+        ).alias(f"p{int(round(q * 100)):02d}")
+        for q in quantiles
+    ]
 
 
 def weighted_quantile_windowed(

@@ -44,22 +44,18 @@ def reads_to_depth_runs(
     another starts) are dropped before the cumsum, so equal-depth
     neighbors never split — the output is the canonical minimal RLE.
     """
-    deltas = reads.select(
-        F.col(chrom_col).alias("chrom"),
-        F.col(start_col).cast("long").alias("bp"),
-        F.lit(1).alias("delta"),
-    ).unionByName(
-        reads.select(
-            F.col(chrom_col).alias("chrom"),
-            F.col(end_col).cast("long").alias("bp"),
-            F.lit(-1).alias("delta"),
-        )
-    )
+    # both breakpoints of a read come out of one scan of ``reads``
+    starts = F.struct(F.col(start_col).cast("long").alias("bp"), F.lit(1).alias("delta"))
+    ends = F.struct(F.col(end_col).cast("long").alias("bp"), F.lit(-1).alias("delta"))
+    deltas = reads.select(F.col(chrom_col).alias("chrom"), F.inline(F.array(starts, ends)))
     agg = (
         deltas.groupBy("chrom", "bp")
         .agg(F.sum("delta").alias("d"))
         .where(F.col("d") != 0)
         .withColumn("bucket", F.floor(F.col("bp") / bucket))
+        # explicit, so the join below infers no filter on one branch only:
+        # both branches then reuse this aggregate's exchange (one scan)
+        .where(F.col("bucket").isNotNull())
     )
 
     # level 1: bucket totals -> exclusive prefix along each chromosome

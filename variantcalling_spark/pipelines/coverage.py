@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from variantcalling_spark.operators.interval_join import point_in_interval_join
-from variantcalling_spark.operators.ordered import histogram_percentiles
+from variantcalling_spark.operators.ordered import cdf_percentiles, histogram_cdf
 
 
 def coverage_summary(
@@ -31,20 +31,20 @@ def coverage_summary(
     quantiles: list[float] = (0.05, 0.25, 0.5, 0.75, 0.95),
 ) -> DataFrame:
     """Per-category depth statistics: count, exact decimal mean, and
-    histogram-CDF percentiles — `coverage_analysis.py:491-534,960-996`
-    in a single job."""
+    histogram-CDF percentiles — `coverage_analysis.py:491-534,960-996`.
+
+    All three come from one (category, depth) histogram, as in the
+    reference's ``generate_stats_from_histogram``: ``n_positions`` is
+    the summed count, and the mean's DECIMAL sum of depth x count is
+    exact, so it equals the per-row decimal sum."""
     annotated = point_in_interval_join(
         depth, intervals, pos_col, keys=keys, start_col=start_col, end_col=end_col
     )
-    pct = histogram_percentiles(annotated, depth_col, ["category"], list(quantiles))
-    stats = annotated.groupBy("category").agg(
-        F.count(F.lit(1)).alias("n_positions"),
-        (
-            F.sum(F.col(depth_col).cast("decimal(12,2)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("mean_depth"),
+    n = F.sum("__cnt")
+    mean = F.sum(F.col(depth_col).cast("decimal(12,2)") * F.col("__cnt")).cast("double") / n
+    return histogram_cdf(annotated, depth_col, ["category"]).groupBy("category").agg(
+        n.alias("n_positions"), mean.alias("mean_depth"), *cdf_percentiles(depth_col, quantiles)
     )
-    return stats.join(pct, "category")
 
 
 def window_binned_depth(

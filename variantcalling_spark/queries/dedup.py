@@ -213,9 +213,12 @@ def q66_minhash_lsh(spark, sf_dir):
     # persisted for the same reason as q65 — and because the logical plan
     # is identical, a run that already executed q65 reuses its cache.
     sh = shingles(c, n=3).transform(managed_persist)
-    sigs = portable_minhash_signatures(sh, num_hashes=32)
-    # persisted signatures + first-colliding-band dedup (the q74 recipe):
-    # one 32-MIN aggregate pass, no distinct() re-shuffle
+    # the cached sh stops AQE reusing the 32-MIN aggregate's exchange
+    # between the band self-join's two sides, so the signatures are
+    # persisted here: one aggregate pass (benchdata/sf1 on 4 vCPUs, best
+    # of three: 9.5 s without this persist, 7.1 s with it)
+    sigs = portable_minhash_signatures(sh, num_hashes=32).transform(managed_persist)
+    # first-colliding-band dedup (the q74 recipe): no distinct() re-shuffle
     cands = portable_band_candidates(sigs, num_bands=8, rows_per_band=4)
     verified = jaccard_for_pairs(cands, sh).where(F.col("jaccard") >= 0.6)
     return verified.select(

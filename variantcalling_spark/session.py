@@ -155,7 +155,10 @@ def get_spark(
     - UTC session timezone: timestamps compare bit-identical against the
       DuckDB oracle (DuckDB timestamps are UTC-naive).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
+    # page size x physical pages is /proc/meminfo MemTotal
+    half_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1, half_gb)}g"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -171,11 +174,9 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
         # local-mode executors live inside the driver JVM, so this IS the
-        # executor heap: 8g left the bench's second scale point at the
-        # eviction edge (storage thrash made repeat runs swing 2-3x);
-        # the dev box has 128 GiB — size the heap so persisted
-        # intermediates at 10x sf0.1 stay resident
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # executor heap: half the machine's RAM leaves the rest to the
+        # Python workers and the OS page cache
+        .config("spark.driver.memory", driver_mem)
     )
     for k, v in (extra_configs or {}).items():
         builder = builder.config(k, v)
