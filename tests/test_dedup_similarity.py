@@ -271,24 +271,10 @@ def test_planner_driven_neardup_equals_default_at_its_plan(spark, sf_dir):
     assert {(a, b) for (a, b, _) in got} <= more
 
 
-def test_connected_components_vs_union_find(spark):
-    """Min-label propagation must produce exactly the components a plain
-    union-find computes, including chains longer than one round."""
-    from variantcalling_spark.operators.dedup import connected_components
-
-    pairs = [
-        (1, 2), (2, 3), (3, 4),          # chain -> one component {1,2,3,4}
-        (10, 11), (11, 10),              # duplicate edge both ways
-        (20, 21), (22, 21),              # star
-        (30, 31), (32, 33), (31, 32),    # two edges merged by a bridge
-        (40, 41),
-    ]
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    got = {
-        r.node: r.label for r in connected_components(df, max_iters=20).collect()
-    }
-
-    parent: dict[int, int] = {}
+def _union_find_labels(pairs):
+    """Plain union-find reference: node -> smallest member of its
+    component, over the non-self pairs (a self-pair carries no edge)."""
+    parent: dict = {}
 
     def find(x):
         parent.setdefault(x, x)
@@ -298,41 +284,74 @@ def test_connected_components_vs_union_find(spark):
         return x
 
     for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expected = {n: find(n) for n in parent}
-    # normalize: label = min member of the component
-    comp: dict[int, list[int]] = {}
-    for n, r in expected.items():
-        comp.setdefault(find(r), []).append(n)
-    want = {n: min(members) for root, members in comp.items() for n in members}
-    assert got == want
+        if a != b:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in list(parent)}
+
+
+def test_connected_components_vs_union_find(spark, monkeypatch):
+    """Star contraction must produce exactly the components a plain
+    union-find computes, on both sides of the driver union-find cap —
+    including a 65-node path graph (diameter 64) and a self-pair,
+    which carries no edge."""
+    from variantcalling_spark.operators import dedup
+
+    graphs = {
+        "chain_dup_star_bridge": [
+            (1, 2), (2, 3), (3, 4),          # chain -> one component {1,2,3,4}
+            (10, 11), (11, 10),              # duplicate edge both ways
+            (20, 21), (22, 21),              # star
+            (30, 31), (32, 33), (31, 32),    # two edges merged by a bridge
+            (40, 41),
+        ],
+        "path_65": [(i, i + 1) for i in range(64)],
+        "mixed": [
+            (1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (20, 21),
+            (5, 6), (6, 7), (7, 5),
+        ],
+        "self_pair": [(5, 5), (1, 2), (7, 7), (7, 8)],
+    }
+    for name, pairs in graphs.items():
+        df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+        want = _union_find_labels(pairs)
+        for cap in (200_000, 0):  # driver union-find, distributed rounds
+            monkeypatch.setattr(dedup, "_LOCAL_COMPONENTS_CAP", cap)
+            got = {(r.node, r.label) for r in dedup.connected_components(df).collect()}
+            assert got == want, (name, cap)
+    # node 5 appears only in a self-pair, so it gets no label
+    assert _union_find_labels(graphs["self_pair"]) == {(1, 1), (2, 1), (7, 7), (8, 7)}
+
+
+def test_connected_components_raises_when_unconverged(spark, monkeypatch):
+    """Exhausting ``max_rounds`` without a converged round is an error,
+    not a partial labelling."""
+    from variantcalling_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_LOCAL_COMPONENTS_CAP", 0)
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="max_rounds=1"):
+        dedup.connected_components(path, max_rounds=1)
 
 
 def test_components_local_path_equals_distributed(spark, monkeypatch):
     """The size-gated driver union-find short circuit must produce
     exactly the (node, label) rows of the distributed rounds it
-    replaces, for BOTH components operators (cap=0 disables the gate
-    and forces the distributed path)."""
-    from variantcalling_spark.operators.dedup import (
-        connected_components,
-        star_contraction_components,
-    )
+    replaces (a cap of 0 forces the distributed path)."""
+    from variantcalling_spark.operators import dedup
 
     pairs = [(i, i + 1) for i in range(1, 30)]  # deep path graph
     pairs += [(100, 103), (103, 101), (200, 201), (300, 300 + 1)]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
 
-    def run_both(op, **kw):
-        monkeypatch.setenv("SPARK_GRAFT_COMPONENTS_LOCAL_CAP", "200000")
-        local = {(r.node, r.label) for r in op(df, **kw).collect()}
-        monkeypatch.setenv("SPARK_GRAFT_COMPONENTS_LOCAL_CAP", "0")
-        dist = {(r.node, r.label) for r in op(df, **kw).collect()}
-        assert local == dist and local
-
-    run_both(star_contraction_components)
-    run_both(connected_components, max_iters=40)
+    monkeypatch.setattr(dedup, "_LOCAL_COMPONENTS_CAP", 200_000)
+    local = {(r.node, r.label) for r in dedup.connected_components(df).collect()}
+    monkeypatch.setattr(dedup, "_LOCAL_COMPONENTS_CAP", 0)
+    dist = {(r.node, r.label) for r in dedup.connected_components(df).collect()}
+    assert local == dist and local
 
 
 def test_projection_sums_arrow_matches_fold(spark):
@@ -440,40 +459,6 @@ def test_audio_decode_and_features(spark):
     assert row.n_samples == len(ss)
     assert row.rms == float(np.sqrt((ss * ss).sum() / len(ss)))
     assert row.n_zero_crossings == int((ss[:-1] * ss[1:] < 0).sum())
-
-
-def test_star_contraction_matches_label_propagation(spark):
-    """Star contraction must produce the same components as min-label
-    propagation — including on a 65-node path graph (diameter 64, deeper
-    than propagation's default round budget) and a multi-component mixed
-    graph."""
-    from variantcalling_spark.operators.dedup import (
-        connected_components,
-        star_contraction_components,
-    )
-
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
-    )
-    got = {
-        (r.node, r.label)
-        for r in star_contraction_components(path, max_rounds=12).collect()
-    }
-    assert got == {(i, 0) for i in range(65)}
-
-    mixed = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (20, 21), (5, 6), (6, 7), (7, 5)],
-        "doc_a long, doc_b long",
-    )
-    star = {
-        (r.node, r.label)
-        for r in star_contraction_components(mixed).collect()
-    }
-    prop = {
-        (r.node, r.label)
-        for r in connected_components(mixed, max_iters=50).collect()
-    }
-    assert star == prop
 
 
 def test_int_matrix_rejects_float_vectors():

@@ -705,6 +705,29 @@ def test_no_row_python_anywhere(spark):
     )
 
 
+def test_operators_cut_lineage_only_through_lineage_cut():
+    """Static guard: ``operators/`` never calls ``.localCheckpoint(`` or
+    ``.checkpoint(`` itself — every cut goes through
+    ``_persist.lineage_cut``, which upgrades to a reliable checkpoint
+    when the session has a checkpoint dir configured."""
+    import ast
+    from pathlib import Path
+
+    import variantcalling_spark
+
+    ops = Path(variantcalling_spark.__file__).parent / "operators"
+    raw = []
+    for path in sorted(ops.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                raw.append(f"{path.name}:{node.lineno}")
+    assert not raw, f"raw checkpoint calls in operators/: {raw}"
+
+
 def test_q300_mixture_is_two_pass_bounded(spark):
     """Temperature mixture: the corpus appears in exactly ONE scan-
     aggregate (per-source ledger); everything downstream is arithmetic
@@ -820,7 +843,7 @@ def test_rowwise_winnowing_projection_is_shuffle_free(spark):
     assert "Exchange" not in p
 
 
-def test_lineage_cut_upgrades_to_reliable_checkpoint(spark, tmp_path):
+def test_lineage_cut_upgrades_to_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """The campaign's junction cut is mode-aware: with no checkpoint
     dir it is a lazy localCheckpoint (executor-local, right for
     local[n]); once a RELIABLE checkpoint directory is configured —
@@ -848,6 +871,17 @@ def test_lineage_cut_upgrades_to_reliable_checkpoint(spark, tmp_path):
         import os
 
         assert any(os.scandir(str(tmp_path / "reliable_ckpt")))
+        # operator cut points go through the same helper: the distributed
+        # components rounds checkpoint into a freshly configured dir
+        from variantcalling_spark.operators import dedup
+
+        monkeypatch.setattr(dedup, "_LOCAL_COMPONENTS_CAP", 0)
+        sc.setCheckpointDir(str(tmp_path / "components_ckpt"))
+        pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "doc_a long, doc_b long")
+        labels = {(r.node, r.label) for r in dedup.connected_components(pairs).collect()}
+        assert labels == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+        written = [f for _, _, fs in os.walk(str(tmp_path / "components_ckpt")) for f in fs]
+        assert written
     finally:
         # do not leak the checkpoint dir into later tests (tmp_path is
         # deleted after this test; a leaked dir would break every later

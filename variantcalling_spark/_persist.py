@@ -52,11 +52,18 @@ def managed_persist(df):
     return df
 
 
-def lineage_cut(df):
-    """LAZY lineage cut — the static-plan campaign's junction operator
-    (see the verify skill): downstream plans read a flat RDD scan
-    instead of re-inlining the upstream subtree per reference, and
-    nothing executes at plan-construction time.
+def lineage_cut(df, eager: bool = False):
+    """Mode-aware lineage cut — the static-plan campaign's junction
+    operator (see the verify skill): downstream plans read a flat RDD
+    scan instead of re-inlining the upstream subtree per reference.
+
+    LAZY by default, so nothing executes at plan-construction time.
+    ``eager=True`` is for SUBSTRATE boundaries whose first consumer
+    reads the frame from multiple DAG branches in one job: a lazy cut
+    materializes under the concurrent cache-population race (measured
+    q131 4 s -> 20-26 s with lazy entry cuts, r11 batch-1 ledger). It
+    pays one job at build time; combine with ``_memo.memoized`` so the
+    build happens once per (session, data).
 
     Storage is mode-aware: ``localCheckpoint`` blocks live on the
     executors that computed them, which is exactly right on local[n]
@@ -67,27 +74,12 @@ def lineage_cut(df):
     the one-line cluster deployment step), this helper upgrades every
     cut point to ``DataFrame.checkpoint`` — replicated, executor-loss-
     safe — with no call-site changes. Chains as
-    ``df.transform(lineage_cut)``."""
+    ``df.transform(lineage_cut)`` or
+    ``df.transform(lineage_cut, eager=True)``."""
     try:
         has_dir = df.sparkSession.sparkContext.getCheckpointDir() is not None
     except Exception:
         has_dir = False
     if has_dir:
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
-
-
-def lineage_cut_eager(df):
-    """EAGER mode-aware lineage cut — for SUBSTRATE boundaries whose
-    first consumer reads the frame from multiple DAG branches in one
-    job: a lazy cut materializes under the concurrent cache-population
-    race (measured q131 4 s -> 20-26 s with lazy entry cuts, r11
-    batch-1 ledger). Pays one job at build time; combine with
-    ``_memo.memoized`` so the build happens once per (session, data)."""
-    try:
-        has_dir = df.sparkSession.sparkContext.getCheckpointDir() is not None
-    except Exception:
-        has_dir = False
-    if has_dir:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

@@ -17,8 +17,8 @@ All are pure DataFrame plans:
   in ANSI SQL, so the oracle checks discovery, not just verification.
 - SimHash: sign-aggregated weighted word-hash bits -> signature;
   near-dups have small Hamming distance.
-- Connected components: min-label propagation folds verified pairs into
-  duplicate clusters (the keep-one-canonical endgame).
+- Connected components: alternating star contraction folds verified
+  pairs into duplicate clusters (the keep-one-canonical endgame).
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from variantcalling_spark._persist import managed_persist
+from variantcalling_spark._persist import lineage_cut, managed_persist
 
 
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
@@ -892,103 +892,27 @@ def contaminated_substring_spans(
     return _merge_occurrence_spans(occ, id_col)
 
 
-def connected_components(
-    pairs: DataFrame, id_a: str = "doc_a", id_b: str = "doc_b", max_iters: int = 30
-) -> DataFrame:
-    """Connected components over a near-duplicate pair graph by min-label
-    propagation: every node ends with the smallest doc_id reachable from
-    it — the cluster id used to pick one canonical doc per duplicate
-    group (the dedup endgame: pairs -> clusters -> keep-list).
-
-    Each round is one distributed join + min-aggregate; the driver loop
-    only checks a convergence count. Rounds needed = graph diameter,
-    and near-dup clusters are shallow (copies of a common source), so
-    2-4 rounds in practice. ``localCheckpoint`` truncates lineage per
-    round — without it the plan doubles every iteration. For graphs
-    with continent-sized components (not the dedup shape), switch to
-    alternating star contraction; for duplicate clusters this converges
-    faster with less machinery.
-    """
-    # Eager lineage cut at entry (same as star_contraction): the edge
-    # relation is read by the initial label build AND by every
-    # propagation round — without the checkpoint each of those
-    # executions re-runs the whole upstream pair pipeline (for q98's
-    # PPJoin discovery that was invisible at sf0.1 and 14x the query
-    # cost at 10x, measured r10: q503 89 s -> see SCALE.md). Entry cuts
-    # MUST stay eager: edges/labels are read by TWO branches of the
-    # first round's DAG, and a lazy checkpoint materializes under a
-    # concurrent cache-population race (the documented q65 swing class
-    # — measured here in r11: lazy entry cuts took q131 from 4 s to
-    # 20-26 s at sf0.01).
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    local = _local_components_frame(edges, "src", "dst")
-    if local is not None:
-        return local
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iters):
-        prop = edges.join(labels, edges["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), "label"
-        )
-        # r11 optimization: checkpoint ``merged`` LAZILY, then run the
-        # convergence probe against the checkpoint and derive the next
-        # round's labels as a projection of it. The old order (probe on
-        # the lazy plan, then an eager checkpoint of the projection)
-        # executed the round's join+aggregate TWICE per iteration. Lazy
-        # is safe exactly here: the probe is merged's ONLY consumer at
-        # materialization time (its exchange map-stage runs fully before
-        # the probe's limit), so no concurrent-population race; the next
-        # round reads an already-materialized checkpoint.
-        merged = (
-            labels.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("new_label"))
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            merged.join(labels, "node")
-            .where(F.col("new_label") != F.col("label"))
-            .limit(1)
-            .count()
-        )
-        labels = merged.select("node", F.col("new_label").alias("label"))
-        if changed == 0:
-            break
-    return labels
+# edge count at or below which connected_components runs on the driver
+_LOCAL_COMPONENTS_CAP = 200_000
 
 
-def _local_components_frame(edges: DataFrame, col_a: str, col_b: str):
-    """Small-graph short circuit shared by both components operators:
-    when the (already materialized) edge set is at most
-    ``$SPARK_GRAFT_COMPONENTS_LOCAL_CAP`` rows (default 200k, ``0``
-    disables), collect it and run driver union-find — one bounded
+def _local_components_frame(edges: DataFrame):
+    """Small-graph short circuit of ``connected_components``: when the
+    (already materialized) (a, b) edge set is at most
+    ``_LOCAL_COMPONENTS_CAP`` rows, collect it and run driver union-find — one bounded
     collect (a few MB at the cap, far under maxResultSize) replaces an
-    O(log n)- or diameter-round driver loop whose per-round cost is
-    jobs and shuffles, not data. The same adaptivity as AQE's
+    O(log n)-round driver loop whose per-round cost is jobs and
+    shuffles, not data. The same adaptivity as AQE's
     broadcast conversion: input statistics pick the physical plan; at
     production scale the count exceeds the cap and the distributed
     rounds run unchanged. Union-by-min-root + path compression, so
     every root IS its component's minimum id — exactly the min-label
-    contract of both operators. Returns the (node, label) DataFrame,
-    or None when the distributed path must run."""
-    import os
-
-    cap = int(os.environ.get("SPARK_GRAFT_COMPONENTS_LOCAL_CAP", "200000"))
+    contract of the distributed rounds. Returns the (node, label)
+    DataFrame, or None when the distributed path must run."""
     # edges is eagerly checkpointed by the caller: count() and
     # collect() scan materialized blocks, they never re-run the
     # upstream pair pipeline
-    if cap <= 0 or edges.count() > cap:
+    if edges.count() > _LOCAL_COMPONENTS_CAP:
         return None
     parent: dict = {}
 
@@ -1001,7 +925,7 @@ def _local_components_frame(edges: DataFrame, col_a: str, col_b: str):
         return root
 
     nodes = set()
-    for row in edges.select(col_a, col_b).collect():
+    for row in edges.select("a", "b").collect():
         a, b = row[0], row[1]
         nodes.add(a)
         nodes.add(b)
@@ -1013,7 +937,7 @@ def _local_components_frame(edges: DataFrame, col_a: str, col_b: str):
 
     from pyspark.sql.types import StructField, StructType
 
-    dt = edges.schema[col_a].dataType
+    dt = edges.schema["a"].dataType
     schema = StructType(
         [StructField("node", dt, False), StructField("label", dt, False)]
     )
@@ -1021,30 +945,40 @@ def _local_components_frame(edges: DataFrame, col_a: str, col_b: str):
     return edges.sparkSession.createDataFrame(rows, schema)
 
 
-def star_contraction_components(
+def connected_components(
     pairs: DataFrame, id_a: str = "doc_a", id_b: str = "doc_b", max_rounds: int = 20
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction — the O(log n)-round algorithm for graphs whose
-    components are DEEP (long chains), where min-label propagation
-    (``connected_components``) needs diameter-many rounds.
+    """Connected components over a pair graph by alternating large-star /
+    small-star contraction (Kiveris et al., *Connected Components in
+    MapReduce and Beyond*, SoCC 2014): O(log n) rounds whatever the
+    components' diameter, so deep chains cost no more rounds than the
+    shallow duplicate cliques of the dedup endgame (pairs -> clusters ->
+    keep-list).
+
+    Returns (node, label) with label = the smallest id in the node's
+    component. A self-pair ``(a, a)`` carries no edge: a node that
+    appears only in self-pairs is not in the output.
 
     Each round: large-star connects every strictly-larger neighbor of u
     to min(N(u) ∪ {u}); small-star connects the rest. Both are one
     groupBy + join over the edge set; the edge set only shrinks toward
     a star forest, and the driver loop holds just a convergence bit.
-    Output matches ``connected_components``: (node, label) with label =
-    the component's minimum id (equality pinned in tests, including a
-    path graph deeper than label propagation's round budget).
+    Raises ``RuntimeError`` when ``max_rounds`` pass without a converged
+    round, rather than return a partial labelling.
     """
+    # entry cut: the size gate and every round read the edge set, and
+    # without the cut each would re-run the upstream pair pipeline
+    # (r10: q503 89 s at 10x). Eager, because the first round reads it
+    # from two branches and a lazy cut materializes under a concurrent
+    # cache-population race (q131 4 s -> 20-26 s at sf0.01, r11).
     e = (
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
+        .transform(lineage_cut, eager=True)
     )
-    local = _local_components_frame(e, "a", "b")
+    local = _local_components_frame(e)
     if local is not None:
         return local
 
@@ -1071,7 +1005,7 @@ def star_contraction_components(
         # lazy cut; the convergence probe below materializes the round
         # (single consumer at materialization time — no race; the next
         # round and the post-loop fold read the populated checkpoint)
-        nxt = star(star(e, large=True), large=False).localCheckpoint(eager=False)
+        nxt = star(star(e, large=True), large=False).transform(lineage_cut)
         # one symmetric-difference job instead of two exceptAll probes:
         # both sides are distinct sets, so a (a, b) key appearing in
         # exactly one of them (count == 1 in the union) IS the
@@ -1087,6 +1021,10 @@ def star_contraction_components(
         e = nxt
         if diff == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within max_rounds={max_rounds}"
+        )
 
     nbrs = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from variantcalling_spark._persist import lineage_cut
+
 
 def _overlap_cond(point: Column, start: Column, end: Column) -> Column:
     return (point >= start) & (point < end)
@@ -224,7 +226,7 @@ def bucketed_closest(
         ).select(*[F.col(c) for c in unresolved.columns])
         unresolved = unresolved.join(
             done_keys, on=unresolved.columns, how="left_anti"
-        ).localCheckpoint()
+        ).transform(lineage_cut, eager=True)
         if not unresolved.take(1):
             break
         radius *= 2

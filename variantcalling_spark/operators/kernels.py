@@ -1052,137 +1052,21 @@ def viterbi_decode_2state_scores(
 
 
 def community_components(edges_and_nodes, max_group_rows: int = 1_000_000):
-    """Per-community connected components via ``applyInPandas`` —
-    union-find over each community's OWN intra-edges (one Arrow batch
-    each), replacing an iterative join-per-round propagation whose 12
-    eagerly-materialized rounds cost minutes on local[32] (the q151
-    lesson again: per-group imperative work belongs in one grouped
-    kernel, not in global shuffle rounds).
-
-    LPA/Louvain keep hub-heavy megaclusters, so "communities are
-    small" is a hope, not an invariant: a near-global community would
-    funnel its entire intra-edge relation into ONE executor task — an
-    OOM/straggler hazard at scale. Communities with more than
-    ``max_group_rows`` input rows are therefore split off (one
-    broadcast anti-join) and solved with the distributed
-    ``star_contraction_components`` over community-namespaced node
-    keys; both paths produce the same (community, n_nodes, n_pieces)
-    rows (equality pinned in tests with the cap forced low).
+    """Per-community connected-piece counts: ``community_piece_labels``
+    (one Arrow union-find batch per community, with its distributed
+    fallback above ``max_group_rows`` input rows) folded to one row
+    per community — n_nodes is the number of labelled nodes, n_pieces
+    the number of distinct piece labels.
 
     Input rows: (community, a, b) — an intra-community edge when
     b >= 0, a node-presence marker when b == -1. Output per community:
     (community, n_nodes, n_pieces)."""
-    import pandas as pd
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        def union(x, y):
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                parent[max(rx, ry)] = min(rx, ry)
-
-        for a in pdf["a"]:
-            parent.setdefault(int(a), int(a))
-        for a, b in zip(pdf["a"], pdf["b"]):
-            if b >= 0:
-                parent.setdefault(int(b), int(b))
-                union(int(a), int(b))
-        roots = {find(x) for x in parent}
-        return pd.DataFrame(
-            {
-                "community": [int(pdf["community"].iloc[0])],
-                "n_nodes": [len(parent)],
-                "n_pieces": [len(roots)],
-            }
-        )
-
-    # The sizes aggregation below is an EAGER action at plan-construction
-    # time, and the input feeds up to two more consumers (small fold, big
-    # fallback) — persist it here so a lazy upstream is computed once,
-    # not 2-3x (callers need not pre-materialize).
-    from variantcalling_spark._persist import managed_persist
-
-    edges_and_nodes = edges_and_nodes.transform(managed_persist)
-    sizes = edges_and_nodes.groupBy("community").agg(
-        F.count(F.lit(1)).alias("_nrows")
-    )
-    big = sizes.where(F.col("_nrows") > max_group_rows).select("community")
-    # one bounded action: the big-community id set is tiny by
-    # construction (it costs one row per OVERSIZED community)
-    big_ids = [r.community for r in big.collect()]
-    small_in = edges_and_nodes
-    if big_ids:
-        small_in = edges_and_nodes.join(
-            F.broadcast(big), "community", "left_anti"
-        )
-    out = small_in.groupBy("community").applyInPandas(
-        fold, "community long, n_nodes long, n_pieces long"
-    )
-    if big_ids:
-        out = out.unionByName(_big_community_components(edges_and_nodes, big))
-    return out
-
-
-def _big_community_components(edges_and_nodes, big) -> DataFrame:
-    """Distributed fallback for oversized communities: star-contraction
-    components over community-namespaced node keys, then per-community
-    piece counting. Edge-connected pieces come from the contraction's
-    labels; marker-only nodes (b == -1, no incident intra-edge) are
-    each their own piece. The node universe is markers UNION edge
-    endpoints — identical to the Arrow fold's count, so an endpoint
-    without a marker row yields the same n_nodes on both paths."""
-    from variantcalling_spark.operators.dedup import star_contraction_components
-
-    rows = edges_and_nodes.join(F.broadcast(big), "community")
-    edges = rows.where(F.col("b") >= 0)
-    nodes = (
-        rows.where(F.col("b") == -1)
-        .select("community", F.col("a").alias("node"))
-        .unionByName(edges.select("community", F.col("a").alias("node")))
-        .unionByName(edges.select("community", F.col("b").alias("node")))
-    )
-    # namespace node ids so one global contraction serves all big
-    # communities without cross-community label collisions
-    ns = F.concat_ws("#", F.col("community").cast("string"), F.col("a").cast("string"))
-    ns_b = F.concat_ws("#", F.col("community").cast("string"), F.col("b").cast("string"))
-    comp = star_contraction_components(
-        edges.select(ns.alias("doc_a"), ns_b.alias("doc_b"))
-    )
-    edge_pieces = (
-        comp.select(
-            F.split_part(F.col("node"), F.lit("#"), F.lit(1))
-            .cast("long")
-            .alias("community"),
-            "node",
-            "label",
-        )
+    return (
+        community_piece_labels(edges_and_nodes, max_group_rows)
         .groupBy("community")
         .agg(
-            F.countDistinct("node").alias("n_edge_nodes"),
-            F.countDistinct("label").alias("n_edge_pieces"),
-        )
-    )
-    return (
-        nodes.groupBy("community")
-        .agg(F.countDistinct("node").cast("long").alias("n_nodes"))
-        .join(edge_pieces, "community", "left")
-        .select(
-            "community",
-            "n_nodes",
-            (
-                F.coalesce(F.col("n_edge_pieces"), F.lit(0))
-                + F.col("n_nodes")
-                - F.coalesce(F.col("n_edge_nodes"), F.lit(0))
-            )
-            .cast("long")
-            .alias("n_pieces"),
+            F.count(F.lit(1)).cast("long").alias("n_nodes"),
+            F.countDistinct("rc").cast("long").alias("n_pieces"),
         )
     )
 
@@ -1344,21 +1228,26 @@ def holt_winters_smooth(
 
 
 def community_piece_labels(edges_and_nodes, max_group_rows: int = 1_000_000):
-    """``community_components``'s PER-NODE sibling: the same grouped
-    union-find Arrow kernel, but returning each node's piece label
-    (community, node, rc) with rc = the piece's MINIMUM node id —
-    what Leiden refinement consumes (``rc`` keys the aggregation
-    units), where ``community_components`` only counts pieces.
+    """Per-community connected components via ``applyInPandas``:
+    union-find over each community's OWN intra-edges (one Arrow batch
+    each), returning each node's piece label (community, node, rc)
+    with rc = the piece's MINIMUM node id — what Leiden refinement
+    consumes (``rc`` keys the aggregation units);
+    ``community_components`` counts the pieces from it.
 
     One Arrow batch per community replaces iterative global
     star-contraction rounds: for q531's five-level loop that is the
     difference between ~900 accumulated stages (which overflow a
     DEFAULT-memory driver's status store — the loop OOMed a vanilla
-    1g local[8] session at level 5) and ~10 stages per level. Same
-    bounded-community contract and the same distributed fallback:
-    communities above ``max_group_rows`` input rows split off to
-    ``star_contraction_components`` over namespaced keys (equality
-    with the fold pinned in tests with the cap forced low).
+    1g local[8] session at level 5) and ~10 stages per level.
+
+    LPA/Louvain keep hub-heavy megaclusters, so "communities are
+    small" is a hope, not an invariant: a near-global community would
+    funnel its entire intra-edge relation into ONE executor task — an
+    OOM/straggler hazard at scale. Communities above ``max_group_rows``
+    input rows therefore split off (one broadcast anti-join) to
+    ``connected_components`` over namespaced keys (equality with the
+    fold pinned in tests with the cap forced low).
 
     Input rows: (community, a, b) — an intra-community edge when
     b >= 0, a node-presence marker when b == -1. The union parents
@@ -1395,6 +1284,10 @@ def community_piece_labels(edges_and_nodes, max_group_rows: int = 1_000_000):
             }
         )
 
+    # The size gate below is an EAGER action at plan-construction time,
+    # and the input feeds up to two more consumers (small fold, big
+    # fallback) — persist it here so a lazy upstream is computed once,
+    # not 2-3x (callers need not pre-materialize).
     from variantcalling_spark._persist import managed_persist
 
     edges_and_nodes = edges_and_nodes.transform(managed_persist)
@@ -1402,6 +1295,8 @@ def community_piece_labels(edges_and_nodes, max_group_rows: int = 1_000_000):
         F.count(F.lit(1)).alias("_nrows")
     )
     big = sizes.where(F.col("_nrows") > max_group_rows).select("community")
+    # one bounded action: the big-community id set is tiny by
+    # construction (it costs one row per OVERSIZED community)
     big_ids = [r.community for r in big.collect()]
     small_in = edges_and_nodes
     if big_ids:
@@ -1421,7 +1316,7 @@ def _big_community_piece_labels(edges_and_nodes, big) -> DataFrame:
     star-contraction over community-namespaced keys; the contraction's
     min-label IS the piece minimum after un-namespacing. Node universe
     is markers UNION edge endpoints, identical to the Arrow fold."""
-    from variantcalling_spark.operators.dedup import star_contraction_components
+    from variantcalling_spark.operators.dedup import connected_components
 
     rows = edges_and_nodes.join(F.broadcast(big), "community")
     edges = rows.where(F.col("b") >= 0)
@@ -1441,7 +1336,7 @@ def _big_community_piece_labels(edges_and_nodes, big) -> DataFrame:
             F.lpad(F.col(col).cast("string"), 20, "0"),
         )
 
-    comp = star_contraction_components(
+    comp = connected_components(
         edges.select(_ns("a").alias("doc_a"), _ns("b").alias("doc_b"))
     )
     labeled = comp.select(

@@ -295,10 +295,10 @@ def q520_planned_minhash_neardup(spark, sf_dir):
     occupancy), verify only on candidates, contraction in O(log n)
     rounds — nothing quadratic; the planner itself is free."""
     from variantcalling_spark.operators.dedup import (
+        connected_components,
         jaccard_for_pairs,
         planned_minhash_candidates,
         shingles,
-        star_contraction_components,
     )
 
     bands_expected = 12
@@ -312,7 +312,7 @@ def q520_planned_minhash_neardup(spark, sf_dir):
         .where(F.col("jaccard") >= _PMH_THRESHOLD)
         .select("doc_a", "doc_b")
     )
-    labels = star_contraction_components(pairs)
+    labels = connected_components(pairs)
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )
@@ -472,9 +472,9 @@ GROUP BY reach
 def q98_dedup_clusters(spark, sf_dir):
     """The dedup endgame: near-duplicate PAIRS (exact Jaccard >= 0.6,
     PPJoin discovery) folded into duplicate CLUSTERS by min-label
-    connected components, yielding one canonical id per group. Label
-    propagation converges in diameter rounds (shallow for dup clusters);
-    the oracle computes the same components with a recursive CTE.
+    connected components, yielding one canonical id per group. Star
+    contraction converges in O(log n) rounds whatever the clusters'
+    depth; the oracle computes the same components with a recursive CTE.
     Output: (cluster_id = smallest member, n_members)."""
     from variantcalling_spark.operators.dedup import connected_components
 
@@ -4070,10 +4070,10 @@ def q463_dedup_threshold_sensitivity(spark, sf_dir):
     edge-subset — the sweep costs |thresholds| contractions, not
     |thresholds| discoveries."""
     from variantcalling_spark.operators.dedup import (
+        connected_components,
         jaccard_for_pairs,
         prefix_filtered_pairs,
         shingles,
-        star_contraction_components,
     )
 
     # lossless PPJoin discovery at the LOOSEST threshold (see q451's
@@ -4089,7 +4089,7 @@ def q463_dedup_threshold_sensitivity(spark, sf_dir):
     for t in _THRESH_SWEEP:
         e = pairs.where(F.col("jaccard") >= t)
         n_pairs = e.count()
-        labels = star_contraction_components(e)
+        labels = connected_components(e)
         cl = labels.groupBy("label").agg(
             F.count(F.lit(1)).alias("n_members")
         ).agg(
@@ -4172,7 +4172,7 @@ def q476_dup_cluster_canonicalization(spark, sf_dir):
     keep/drop verdict.
 
     Scale shape: pairs via lossless PPJoin (q65 path), components via
-    min-label propagation (shallow dup cliques), then ONE rank window
+    O(log n)-round star contraction, then ONE rank window
     over cluster-bounded partitions and a join back to per-doc quality
     — nothing beyond the q98 plan but the argmax."""
     from variantcalling_spark.operators.dedup import connected_components
@@ -5218,7 +5218,6 @@ def _method_pair_frames(spark, sf_dir):
 
 
 def _build_method_pair_frames(spark, sf_dir):
-    from variantcalling_spark._persist import lineage_cut_eager
     from variantcalling_spark.operators.dedup import (
         jaccard_for_pairs,
         portable_band_candidates,
@@ -5275,9 +5274,9 @@ def _build_method_pair_frames(spark, sf_dir):
     # q511 votes + components, q517 votes + per-method partitions) reads
     # each at least twice, the discoveries are the expensive part, and
     # the memo above makes the materialization once-per-session
-    m_exact = m_exact.transform(lineage_cut_eager)
-    m_minhash = m_minhash.transform(lineage_cut_eager)
-    m_winnow = m_winnow.transform(lineage_cut_eager)
+    m_exact = m_exact.transform(lineage_cut, eager=True)
+    m_minhash = m_minhash.transform(lineage_cut, eager=True)
+    m_winnow = m_winnow.transform(lineage_cut, eager=True)
     return m_exact, m_minhash, m_winnow
 
 
@@ -5900,8 +5899,7 @@ def q517_consensus_ari(spark, sf_dir):
     # graphs (consensus + three methods) instead of four separate
     # iterative folds — edges live in disjoint id namespaces
     # (node' = mi * OFF + doc_id), so components never cross graphs,
-    # rounds run max(diameters) times instead of sum, and the driver
-    # pays one convergence loop. min-label decodes exactly: within a
+    # and the driver pays one convergence loop instead of four. min-label decodes exactly: within a
     # namespace every node shares the mi * OFF offset, so
     # label' % OFF == the per-graph min doc_id.
     OFF = 1 << 40  # doc ids are far below 2^40; 4 * OFF fits bigint

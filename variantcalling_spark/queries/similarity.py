@@ -749,7 +749,6 @@ from variantcalling_spark._memo import (  # noqa: E402
     _session_stopped,
     memoized as _memoized,
 )
-from variantcalling_spark._persist import lineage_cut_eager  # noqa: E402
 
 
 def _knn3_fixed6(spark, sf_dir):
@@ -767,7 +766,7 @@ def _knn3_fixed6(spark, sf_dir):
 
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
-        return knn_graph(emb, k=3, prefix_bits=6).transform(lineage_cut_eager)
+        return knn_graph(emb, k=3, prefix_bits=6).transform(lineage_cut, eager=True)
 
     return _memoized("knn3f6", spark, sf_dir, build)
 
@@ -782,7 +781,7 @@ def _knn3_adaptive(spark, sf_dir):
 
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
-        return adaptive_knn_graph(emb, k=3).transform(lineage_cut_eager)
+        return adaptive_knn_graph(emb, k=3).transform(lineage_cut, eager=True)
 
     return _memoized("knn3ad", spark, sf_dir, build)
 
@@ -799,7 +798,7 @@ def _ivf16_index(spark, sf_dir):
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
         centroids, assigned = ivf_index(emb, n_centroids=16)
-        return centroids, assigned.transform(lineage_cut_eager)
+        return centroids, assigned.transform(lineage_cut, eager=True)
 
     return _memoized("ivf16", spark, sf_dir, build)
 
@@ -817,7 +816,7 @@ def _pq_codes(spark, sf_dir, m: int):
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
         codebooks, codes = pq_index(emb, m=m, k_sub=16)
-        return codebooks, codes.transform(lineage_cut_eager)
+        return codebooks, codes.transform(lineage_cut, eager=True)
 
     return _memoized(f"pq{m}x16", spark, sf_dir, build)
 
@@ -1229,9 +1228,9 @@ def q175_mutual_nn_clusters(spark, sf_dir):
     threshold dedup when false merges are expensive (each cluster is
     held together only by mutually-confirmed neighbor links). Mutual
     filtering first makes the component graph far sparser than the raw
-    kNN graph, so min-label propagation converges in a couple of
-    rounds; the oracle replays the same components as a recursive
-    CTE (the q98 pattern on the embedding side)."""
+    kNN graph, so star contraction converges in a couple of rounds;
+    the oracle replays the same components as a recursive CTE (the
+    q98 pattern on the embedding side)."""
     from variantcalling_spark.operators.dedup import connected_components
     from variantcalling_spark.operators.similarity import knn_graph
 
@@ -2030,7 +2029,7 @@ def q253_dbscan(spark, sf_dir):
     epsilon ambiguity at the eps boundary. Scale shape: candidate
     pairs are sum-of-cell-size^2 (density-bounded), never n^2;
     components contract in O(log n) rounds."""
-    from variantcalling_spark.operators.dedup import star_contraction_components
+    from variantcalling_spark.operators.dedup import connected_components
 
     eps, minpts = _DBSCAN_EPS_Q, _DBSCAN_MINPTS
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2094,7 +2093,7 @@ def q253_dbscan(spark, sf_dir):
         .join(core.select(F.col("vec_id").alias("b")), "b")
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
     )
-    lbl = star_contraction_components(ce).select(
+    lbl = connected_components(ce).select(
         F.col("node").alias("vec_id"), F.col("label").alias("cluster_id")
     )
     # singleton cores (no core neighbor) are their own cluster
@@ -7215,47 +7214,6 @@ def _build_leiden_refined(spark, sf_dir):
     return edges, deg, m2t, after, refined
 
 
-def _refine_pieces(edges, part):
-    """(Star-contraction form — kept as the fully-distributed
-    reference implementation and for the grouped kernel's oversized-
-    community fallback path; the production call sites now go through
-    ``_refine_pieces_grouped``, which computes the same (node,
-    community, rc) with one Arrow union-find per community and ~4
-    stages instead of iterative rounds — the q531 driver-OOM lesson.)
-
-    Leiden REFINEMENT phase as a reusable step: split every
-    community of ``part(node, community)`` into its connected pieces
-    over the intra-community edges (star contraction, O(log n)
-    rounds). Returns ``(node, community, rc)`` localCheckpoint'd — rc
-    is the piece-minimum node id (matching the oracle closures'
-    MIN(lab)); ``community`` carries the INPUT partition's label, which
-    the next super-sweep uses as its initial community (Leiden's
-    contract: refinement decides the aggregation units, the current
-    partition decides their starting communities). Splitting never
-    changes intra-edge totals and strictly shrinks the degree-penalty
-    term, so Q(refined) >= Q(part) is a theorem (q505's pin)."""
-    from variantcalling_spark.operators.dedup import star_contraction_components
-
-    intra = (
-        edges.join(
-            part.select(F.col("node").alias("src"), F.col("community").alias("ca")),
-            "src",
-        )
-        .join(
-            part.select(F.col("node").alias("dst"), F.col("community").alias("cb")),
-            "dst",
-        )
-        .where(F.col("ca") == F.col("cb"))
-        .select("src", "dst")
-    )
-    comp = star_contraction_components(intra, id_a="src", id_b="dst")
-    return part.join(comp, "node", "left").select(
-        "node",
-        "community",
-        F.coalesce("label", F.col("node")).alias("rc"),
-    ).localCheckpoint()
-
-
 def _super_sweep_frames(edges, deg, m2t, ref):
     """Leiden AGGREGATE-LEVEL sweep as a reusable step: collapse each
     refined piece of ``ref(node, community, rc)`` into a supernode
@@ -7449,11 +7407,11 @@ def q505_leiden_refinement(spark, sf_dir):
     in tests alongside this full value oracle.
 
     Refined community ids are the piece-minimum node ids on both
-    engines (star contraction's label = the closure's MIN(lab)), so
+    engines (the union-find's piece minimum = the closure's MIN(lab)), so
     the partitions — not just the Q numbers — are comparable.
 
-    Scale shape: components over the intra-edge relation via
-    star contraction (O(log n) rounds, localCheckpoint per round);
+    Scale shape: components over the intra-edge relation via one
+    grouped Arrow union-find per community (``community_piece_labels``);
     each modularity side is one edges-to-partition double equi-join +
     two bounded ledgers — O(E), map-side combinable, no collect."""
     edges, deg, m2t, after, refined = _leiden_refined_frames(spark, sf_dir)
@@ -7903,7 +7861,7 @@ def q519_leiden_multilevel(spark, sf_dir):
 
     Scale shape: every level is q506's super-sweep (equi-joins +
     map-side-combinable SUMs on a graph that SHRINKS per level) plus
-    q505's star-contraction refinement (O(log n) rounds); the LPA/move
+    q505's grouped union-find refinement; the LPA/move
     substrate is the memoized checkpoint shared with
     q491/q500/q505/q506 — built once per session, REUSED per level
     (variantcalling_spark/_memo.py). The only driver state is one
@@ -8172,7 +8130,7 @@ def q514_planner_driven_neardup(spark, sf_dir):
     Scale shape: discovery is the banded bucket self-join (candidate
     volume per band held by the bits dial), contraction is O(log n)
     rounds with per-round localCheckpoint — nothing quadratic."""
-    from variantcalling_spark.operators.dedup import star_contraction_components
+    from variantcalling_spark.operators.dedup import connected_components
     from variantcalling_spark.operators.similarity import (
         banded_near_dup_pairs,
         planned_bands_for_recall,
@@ -8186,7 +8144,7 @@ def q514_planner_driven_neardup(spark, sf_dir):
         n_planes=_PDN_BITS * bands,
         n_bands=bands,
     ).select("id_a", "id_b")
-    labels = star_contraction_components(pairs, id_a="id_a", id_b="id_b")
+    labels = connected_components(pairs, id_a="id_a", id_b="id_b")
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )
@@ -8604,9 +8562,19 @@ SELECT * FROM (
 
 
 def _refine_pieces_grouped(edges, part):
-    """``_refine_pieces`` for BOUNDED communities: the same
-    (node, community, rc) contract with rc = piece-minimum node id,
-    computed by ONE grouped Arrow union-find
+    """Leiden REFINEMENT phase as a reusable step: split every
+    community of ``part(node, community)`` into its connected pieces
+    over the intra-community edges. Returns ``(node, community, rc)``
+    localCheckpoint'd — rc is the piece-minimum node id (matching the
+    oracle closures' MIN(lab)); ``community`` carries the INPUT
+    partition's label, which the next super-sweep uses as its initial
+    community (Leiden's contract: refinement decides the aggregation
+    units, the current partition decides their starting communities).
+    Splitting never changes intra-edge totals and strictly shrinks the
+    degree-penalty term, so Q(refined) >= Q(part) is a theorem (q505's
+    pin).
+
+    The pieces come from ONE grouped Arrow union-find
     (``community_piece_labels``) instead of iterative star-contraction
     rounds. q531 runs five refinements per invocation; the star form
     accumulated ~900 stages across the loop and overflowed a

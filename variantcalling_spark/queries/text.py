@@ -6298,11 +6298,11 @@ def q432_stylometric_clusters(spark, sf_dir):
 
     Scale shape: token counts and z-stats are two combinable
     aggregates; the {_STYL_TOPW}-word axis broadcasts; candidate pairs
-    are Σ bucket² like every banded family; components converge in
-    diameter rounds (q98 machinery). Oracle replays the identical
+    are Σ bucket² like every banded family; components contract in
+    O(log n) rounds (q98 machinery). Oracle replays the identical
     chain incl. a recursive-CTE closure."""
     from pyspark.sql import Window as W
-    from variantcalling_spark.operators.dedup import star_contraction_components
+    from variantcalling_spark.operators.dedup import connected_components
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w")).where(
@@ -6430,11 +6430,10 @@ def q432_stylometric_clusters(spark, sf_dir):
         )
         .where(F.col("delta") <= _STYL_THRESH)
     )
-    # star contraction, not min-label propagation: loose stylometric
-    # similarity chains into DEEP near-corpus-wide components at 10x
-    # (measured: propagation 216 s vs contraction's O(log n) rounds on
-    # the same 98k-edge graph — the operator docstring's own rule)
-    labels = star_contraction_components(pairs)
+    # loose stylometric similarity chains into DEEP near-corpus-wide
+    # components at 10x; star contraction needs only O(log n) rounds
+    # for them
+    labels = connected_components(pairs)
     return labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members")
     ).select(F.col("label").alias("cluster_id"), "n_members")

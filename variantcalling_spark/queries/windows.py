@@ -6479,7 +6479,7 @@ def _build_q377(spark, sf_dir):
     never becomes a round count. The ORACLE walks the same chains
     with a recursive CTE from the anchors. Node encoding: series
     codes from the tiny event-type domain x 100000 + window index."""
-    from variantcalling_spark.operators.dedup import star_contraction_components
+    from variantcalling_spark.operators.dedup import connected_components
 
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
@@ -6572,7 +6572,7 @@ def _build_q377(spark, sf_dir):
         (F.col("base") + F.col("i")).alias("doc_a"),
         (F.col("base") + F.col("j")).alias("doc_b"),
     )
-    comp = star_contraction_components(enc.select("doc_a", "doc_b"))
+    comp = connected_components(enc.select("doc_a", "doc_b"))
     nodes = enc.select(
         "event_type", F.col("doc_a").alias("node"), F.col("i").alias("ix")
     ).unionByName(
