@@ -5997,7 +5997,7 @@ _NND_BITS = 6
 _NND_BANDS = 2
 
 
-_NND_DEFAULT_BASE = f"""base AS (
+_NND_DEFAULT_BASE = f"""base AS MATERIALIZED (
   SELECT vec_id,
          list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * {QUANT}) AS BIGINT)) AS v
   FROM embeddings
@@ -6017,7 +6017,12 @@ def _nnd_base_cte_sql(
     bit-identical to q132's single-band bucket — the plane matrix is
     position-independent), the multiband candidate union ``prs``, and
     the initial top-k graph ``g0`` — the SQL twin of
-    ``nn_descent_refine``'s initialization."""
+    ``nn_descent_refine``'s initialization.
+
+    Every CTE of the chain (and a caller's ``base_sql``) is AS
+    MATERIALIZED: most are referenced two or more times downstream, and
+    DuckDB re-expands an inlined CTE's whole prefix at every reference
+    (SCALE.md, the CTE-doubling lesson)."""
     from variantcalling_spark.operators.similarity import _plane_signs
 
     n_planes = band_bits * n_bands
@@ -6041,29 +6046,29 @@ def _nnd_base_cte_sql(
         for b in range(n_bands)
     )
     return f"""{base_sql or _NND_DEFAULT_BASE},
-sig AS (
+sig AS MATERIALIZED (
   SELECT vec_id,
          {sums}
   FROM (SELECT vec_id, list_transform(v, x -> CAST(x AS DOUBLE)) AS vd FROM base)
 ),
-bk AS (SELECT vec_id, v FROM base),
-banded AS (
+bk AS MATERIALIZED (SELECT vec_id, v FROM base),
+banded AS MATERIALIZED (
   {band_rows}
 ),
-prs AS (
+prs AS MATERIALIZED (
   SELECT DISTINCT p1.vec_id AS vec_id, p2.vec_id AS neighbor_id
   FROM banded p1 JOIN banded p2
     ON p1.band_ix = p2.band_ix AND p1.key = p2.key
   WHERE p1.vec_id <> p2.vec_id
 ),
-sc0 AS (
+sc0 AS MATERIALIZED (
   SELECT prs.vec_id, prs.neighbor_id,
          list_dot_product(q.v, c.v)
            / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))) AS cosine
   FROM prs JOIN bk q ON q.vec_id = prs.vec_id
            JOIN bk c ON c.vec_id = prs.neighbor_id
 ),
-g0 AS (
+g0 AS MATERIALIZED (
   SELECT vec_id, neighbor_id, cosine FROM (
     SELECT *, CAST(ROW_NUMBER() OVER (
       PARTITION BY vec_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rank
@@ -6079,24 +6084,24 @@ def _nnd_iter_cte_sql(i: int, k: int = 3) -> str:
     body in ``nn_descent_refine``."""
     p = i - 1
     return f"""
-und{i} AS (
+und{i} AS MATERIALIZED (
   SELECT vec_id, neighbor_id FROM g{p}
   UNION
   SELECT neighbor_id AS vec_id, vec_id AS neighbor_id FROM g{p}
 ),
-cand{i} AS (
+cand{i} AS MATERIALIZED (
   SELECT DISTINCT u1.vec_id AS vec_id, u2.neighbor_id AS neighbor_id
   FROM und{i} u1 JOIN und{i} u2 ON u1.neighbor_id = u2.vec_id
   WHERE u1.vec_id <> u2.neighbor_id
 ),
-sc{i} AS (
+sc{i} AS MATERIALIZED (
   SELECT cd.vec_id, cd.neighbor_id,
          list_dot_product(q.v, c.v)
            / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))) AS cosine
   FROM cand{i} cd JOIN bk q ON q.vec_id = cd.vec_id
                   JOIN bk c ON c.vec_id = cd.neighbor_id
 ),
-g{i} AS (
+g{i} AS MATERIALIZED (
   SELECT vec_id, neighbor_id, cosine FROM (
     SELECT *, CAST(ROW_NUMBER() OVER (
       PARTITION BY vec_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rank
@@ -6177,7 +6182,7 @@ FROM nex""")
     arms = "\nUNION ALL\n".join(arm_rows)
     return f"""
 WITH {_nnd_base_cte_sql(k=_NND_K, base_sql=base_sql)},{iters},
-sb AS (
+sb AS MATERIALIZED (
   SELECT vec_id, neighbor_id, cosine FROM (
     SELECT *, CAST(ROW_NUMBER() OVER (
       PARTITION BY vec_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rank
@@ -6193,7 +6198,7 @@ sb AS (
     )
   ) WHERE rank <= {_NND_K}
 ),
-ex AS (
+ex AS MATERIALIZED (
   SELECT query_id, cand_id FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
            CAST(ROW_NUMBER() OVER (
@@ -6205,7 +6210,7 @@ ex AS (
     WHERE {pp.format(a="q")}
   ) WHERE rank <= {_NND_K}
 ),
-nex AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM ex)
+nex AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM ex)
 {arms}
 """
 
@@ -6694,7 +6699,7 @@ def _nndc_base_sql() -> str:
   FROM {q_sub}"""
         for c in range(1, _NNDC_COPIES + 1)
     )
-    return f"""base AS (
+    return f"""base AS MATERIALIZED (
   SELECT vec_id * 10 AS vec_id, qv AS v FROM {q_sub}
   UNION ALL
 {copies}
